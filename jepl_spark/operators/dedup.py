@@ -25,6 +25,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jepl_spark.operators import replicate
+
 
 # -- exact ------------------------------------------------------------------
 
@@ -141,13 +143,6 @@ def _banded_cross_candidates(
         .select("__id_new", "__id_old")
         .distinct()
     )
-
-
-#: Plan-stats ceiling for the replicated minhash dedup_against probe:
-#: the snapshot's (num_hashes·8 B)-per-row signature matrix must fit
-#: the driver and every executor.  One-sided safe — unknown or large
-#: estimates keep the banded-join path, which streams any size.
-_AGAINST_BROADCAST_MAX_BYTES = 128 * 1024 * 1024
 
 
 def _minhash_against_losers_replicated(
@@ -307,7 +302,13 @@ def dedup_against(
     None for simhash — preserving simhash's lossless guarantee;
     capping trades recall for bounded work exactly as in the
     within-batch operators).  The delta's losers materialize eagerly
-    (ids only) so no cache entry outlives the call."""
+    (ids only) so no cache entry outlives the call.
+
+    ``policy="minhash"`` computes the losers locally instead when
+    ``replicate.fits`` both collected signature matrices — the delta's
+    and the snapshot's, each row a signature plus its band keys at
+    (num_hashes + bands)·8 B, by the optimizer's row estimates — so a
+    delta of many short docs is bounded by its rows, not its bytes."""
     etc = existing_text_col or text_col
     if policy == "exact":
         hc = "__dedup_against_h"
@@ -408,26 +409,15 @@ def dedup_against(
     new_sigs = build_sigs(df, text_col).persist()
 
     losers = None
-    if policy == "minhash":
-        # local probe when the optimizer's own estimates say BOTH
-        # signature matrices fit the driver (the pre-hashed side
-        # table's scan stats are its file size; a raw-corpus side
-        # built through the Arrow UDF has no usable stats and keeps
-        # the streaming banded join; the delta side is bounded by its
-        # source-scan estimate)
-        def _est(frame: DataFrame) -> int:
-            try:
-                sz = (frame._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes())
-                return int(sz if isinstance(sz, int) else sz.toString())
-            except Exception:
-                return 1 << 62
-        if (_est(old_sigs) <= _AGAINST_BROADCAST_MAX_BYTES
-                and _est(df) <= _AGAINST_BROADCAST_MAX_BYTES):
-            losers = _minhash_against_losers_replicated(
-                new_sigs, old_sigs, id_col, sig_col, bands, rows, cap,
-                threshold, num_hashes,
-            )
+    # local probe when BOTH collected matrices fit: per row the
+    # signature plus its band keys, (num_hashes + bands)·8 B, over the
+    # optimizer's row estimates of the delta and the snapshot
+    if policy == "minhash" and replicate.fits(replicate.planned_bytes(
+            df, existing, row_bytes=(num_hashes + bands) * 8)):
+        losers = _minhash_against_losers_replicated(
+            new_sigs, old_sigs, id_col, sig_col, bands, rows, cap,
+            threshold, num_hashes,
+        )
     if losers is None:
         cands = _banded_cross_candidates(
             band_of(new_sigs), band_of(old_sigs), cap
@@ -1165,13 +1155,13 @@ def near_dup_components(
     # Small-graph fast path: near-dup pair graphs are typically tiny
     # vs the corpus (thresholded pairs).  The edge set is already
     # materialized by the checkpoint above, so counting it is a
-    # block-read; under the threshold the whole graph collects
-    # (~16 B/edge), broadcasts, and ONE executor task runs in-memory
+    # block-read; when the graph fits the replicate budget it collects
+    # (16 B/edge), broadcasts, and ONE executor task runs in-memory
     # pointer jumping to the exact same min-label fixpoint — the
     # distributed loop's ~5 rounds of multi-stage joins (measured
     # ~1.1 s/round of pure scheduling at 200k edges) collapse to one
     # job.  Larger graphs keep the iterative ids-only rounds below.
-    if edges.count() <= _COMPONENTS_LOCAL_MAX_EDGES:
+    if replicate.fits(edges.count() * 16):
         return _components_local(edges)
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -1237,14 +1227,6 @@ def near_dup_components(
     )
 
 
-#: Edge-count ceiling for the local connected-components path: 5M
-#: bidirectional edges ≈ 80 MB of index per executor and well under a
-#: second of in-memory label propagation — far past any realistic
-#: near-dup pair graph, while billion-edge graphs keep the iterative
-#: distributed rounds.
-_COMPONENTS_LOCAL_MAX_EDGES = 5_000_000
-
-
 def _components_local(edges: DataFrame) -> DataFrame:
     """Exact min-label connected components of a SMALL (already
     counted) bidirectional edge frame, computed by vectorized pointer
@@ -1306,27 +1288,34 @@ def _components_local(edges: DataFrame) -> DataFrame:
     return out
 
 
+def _long_surrogates(ids: DataFrame) -> DataFrame:
+    """``(__oid, __sid)``: a collision-free long surrogate for each
+    distinct non-null id of the one-column frame ``ids`` (column
+    ``__oid``), for operators whose fast paths need integral ids.  The
+    assignment is frozen by an eager localCheckpoint so every consumer
+    joins against ONE assignment (a lazy monotonically_increasing_id
+    re-evaluates per consumer)."""
+    return (
+        ids.where(F.col("__oid").isNotNull())
+        .distinct()
+        .withColumn("__sid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
+    )
+
+
 def _components_remapped(
     pairs: DataFrame, id_a: str, id_b: str, max_rounds: int, jumps: int
 ) -> DataFrame:
     """near_dup_components for NON-integral id types: remap ids through
-    a collision-free long surrogate, propagate on the surrogates (they
-    carry no order — only connectivity matters), then map back and
-    recompute each cluster's representative as the minimum ORIGINAL id.
-    The surrogate assignment is frozen by an eager localCheckpoint so
-    every downstream consumer joins against ONE assignment (a lazy
-    monotonically_increasing_id re-evaluates per consumer).  Two extra
-    ids-only joins + one groupBy vs the integral fast path — all over
-    the (thresholded, tiny-vs-corpus) pair graph's node set."""
-    ids = (
+    :func:`_long_surrogates`, propagate on the surrogates (they carry
+    no order — only connectivity matters), then map back and recompute
+    each cluster's representative as the minimum ORIGINAL id.  Two
+    extra ids-only joins + one groupBy vs the integral fast path — all
+    over the (thresholded, tiny-vs-corpus) pair graph's node set."""
+    mapping = _long_surrogates(
         pairs.select(F.col(id_a).alias("__oid"))
         .unionByName(pairs.select(F.col(id_b).alias("__oid")))
-        .where(F.col("__oid").isNotNull())
-        .distinct()
     )
-    mapping = ids.withColumn(
-        "__sid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
     m_a = mapping.select(
         F.col("__oid").alias("__a"), F.col("__sid").alias("id_a")
     )
@@ -1944,7 +1933,7 @@ def ngram_jaccard_pairs(
     become likely; per-pair intersection counts are additionally
     oracle-checked by the ngram_jaccard_pairs gate.
 
-    Shape (integral-id fast path): TWO exchanges total, both
+    Shape: TWO exchanges total, both
     fundamental — (1) postings ``(id, set_size, shingle)`` partition by
     shingle, so each shingle's full posting group lands in one task
     where an Arrow stage applies the df cap from the local group size
@@ -1958,91 +1947,75 @@ def ngram_jaccard_pairs(
     join+groupBy formulation materialized every co-occurring pair
     (~90% of which share exactly one shingle) through a JVM
     hash-aggregate and two size joins — measured 316 s vs 21 s at
-    sf1.0 (50k docs, 114M distinct co-occurring pairs).  Non-integral
-    ids (string/UUID) keep the join formulation (numpy pair packing
-    needs a total order identical to Spark's, which only integral
-    types guarantee)."""
+    sf1.0 (50k docs, 114M distinct co-occurring pairs).
+
+    Replicated path: when ``replicate.fits`` the shingle index — one
+    8-byte hash per token, sized by the planned bytes of the
+    ``(id, text)`` projection it is built from — the per-doc shingle
+    table collects once, broadcasts, and every task computes complete
+    pair counts for its hash-slice of smaller-endpoint ids, so the
+    co-occurrence stream never crosses an exchange (measured 46 s →
+    13 s at sf1.0).  Unknown or larger inputs, and ``materialize=False``
+    (a lazy plan must not collect at call time), take the two-exchange
+    shape above.
+
+    Non-integral ids (string/UUID, decimal, float) run both shapes on
+    collision-free long surrogates (numpy pair packing needs integral
+    ids) and map each pair back as ``(least, greatest)`` of the
+    original ids.  The surrogate assignment is frozen by an eager
+    checkpoint, which a lazy plan cannot do: ``materialize=False`` with
+    non-integral ids raises ``ValueError``."""
     from pyspark.sql.types import (
         ByteType, IntegerType, LongType, ShortType,
     )
 
-    id_type = df.schema[id_col].dataType
-    if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        return _ngram_jaccard_pairs_arrow(
-            df, text_col, id_col, shingle_n, min_jaccard,
-            max_shingle_df, materialize,
+    integral = isinstance(df.schema[id_col].dataType,
+                          (ByteType, ShortType, IntegerType, LongType))
+    if not (integral or materialize):
+        raise ValueError(
+            f"materialize=False needs an integral {id_col!r}: non-integral "
+            f"ids are remapped through surrogates frozen by an eager "
+            f"checkpoint"
         )
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
-    ).select(
-        "__id",
-        F.size("__sh").alias("__n"),
-        F.explode("__sh").alias("__s"),
-    )
-    # The exploded index feeds four consumers (df-count + join probe +
-    # both self-join sides); without a persist the shingling expression
-    # (regexp + split + slices + distinct) re-executes per consumer —
-    # measured ~2× the whole operator's wall at sf0.1.  The persisted
-    # shape is (long, int, long) — a fraction of the text it came from
-    # — and is released before returning (result is materialized).
-    if materialize:
-        base = base.persist()
-
-    shingle_df = base.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    pruned = base.join(
-        shingle_df.filter(F.col("__df") <= max_shingle_df), on="__s", how="inner"
-    )
-
-    # Self-join carries ONLY (shingle, id): per-doc set sizes would be
-    # dead weight through the largest shuffle of the plan — they are
-    # broadcast-joined onto the (much smaller) aggregated pair counts
-    # instead.
-    a = pruned.select(F.col("__s"), F.col("__id").alias("id_a"))
-    b = pruned.select(F.col("__s"), F.col("__id").alias("id_b"))
-    common = (
-        a.join(b, on="__s", how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__common"))
-    )
-    # No broadcast HINT on sizes: one row per doc, so at billions of
-    # docs it must stay a shuffle join of two already-small tables —
-    # AQE auto-broadcasts when it actually fits.
-    sizes = base.groupBy("__id").agg(F.first("__n").alias("__n"))
-    common = common.join(
-        sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na")),
-        "id_a",
-    ).join(
-        sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb")),
-        "id_b",
-    )
-    jac = F.col("__common") / (F.col("__na") + F.col("__nb") - F.col("__common"))
-    out = common.select(
-        "id_a", "id_b", jac.alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
-    if materialize:
-        out = out.localCheckpoint(eager=True)  # tiny: thresholded pairs
-        base.unpersist()
-    return out
+    frame, ic = df, id_col
+    if not integral:
+        mapping = _long_surrogates(df.select(F.col(id_col).alias("__oid")))
+        frame = df.join(
+            mapping, df[id_col] == mapping["__oid"], "left"
+        ).select("__sid", text_col)
+        ic = "__sid"
+    args = (frame, text_col, ic, shingle_n, float(min_jaccard),
+            int(max_shingle_df))
+    if materialize and replicate.fits(
+            replicate.planned_bytes(df.select(id_col, text_col))):
+        out = _ngram_jaccard_pairs_replicated(*args)
+    else:
+        out = _ngram_jaccard_pairs_exchange(*args, materialize)
+    if integral:
+        return out
+    a = mapping.select(F.col("__sid").alias("id_a"), F.col("__oid").alias("__a"))
+    b = mapping.select(F.col("__sid").alias("id_b"), F.col("__oid").alias("__b"))
+    return out.join(a, "id_a").join(b, "id_b").select(
+        F.least("__a", "__b").alias("id_a"),
+        F.greatest("__a", "__b").alias("id_b"),
+        "jaccard",
+    ).localCheckpoint(eager=True)  # tiny: thresholded pairs
 
 
-def _ngram_jaccard_pairs_arrow(
+def _ngram_jaccard_pairs_exchange(
     df: DataFrame,
     text_col: str,
     id_col: str,
     shingle_n: int,
-    min_jaccard: float,
-    max_shingle_df: int,
+    thresh: float,
+    cap: int,
     materialize: bool,
 ) -> DataFrame:
-    """Integral-id fast path of :func:`ngram_jaccard_pairs` — see its
-    docstring for the two-exchange shape and the measured numbers.
-    Semantics are identical to the join formulation, boundary cases
-    included: the df cap counts ALL postings of a shingle (null-id
-    rows inflate a shingle's df exactly as the old groupBy did), while
-    pair generation skips null ids and equal-id posting pairs (the old
-    ``id_a < id_b`` strictness)."""
+    """Two-exchange shape of :func:`ngram_jaccard_pairs` (integral
+    ids) — see its docstring for the shape and the measured numbers.
+    Boundary semantics: the df cap counts ALL postings of a shingle
+    (null-id rows inflate a shingle's df), while pair generation skips
+    null ids and equal-id posting pairs (duplicate-id rows)."""
     import numpy as np
     import pyarrow as pa
 
@@ -2051,33 +2024,6 @@ def _ngram_jaccard_pairs_arrow(
     )
 
     id_type = df.schema[id_col].dataType
-    cap = int(max_shingle_df)
-    thresh = float(min_jaccard)
-
-    # Replicated-index path (guide §3.1/§8: broadcast the small side,
-    # never shuffle the heavy intermediate): when the CORPUS is small
-    # enough — by the optimizer's own plan-size estimate — the per-doc
-    # shingle table collects to ~8 bytes/shingle, broadcasts once, and
-    # every task computes COMPLETE pair counts for its hash-slice of
-    # smaller-endpoint ids, emitting only the ≥ min_jaccard survivors.
-    # The co-occurrence stream (114M distinct pairs at sf1.0 — 90%
-    # sharing exactly one shingle) then never crosses an exchange or
-    # the Arrow boundary at all: measured 46 s (exchange path) → 13 s.
-    # The estimate is one-sided safe: unknown/large stats fall back to
-    # the exchange path below, which streams any corpus size.
-    try:
-        sz = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est_bytes = int(sz if isinstance(sz, int) else sz.toString())
-    except Exception:
-        est_bytes = 1 << 62
-    if materialize and est_bytes <= _NGRAM_BROADCAST_MAX_BYTES:
-        # (materialize=False keeps the lazy exchange plan: the
-        # replicated path collects the index at call time, which the
-        # side-effect-free plan-audit contract forbids)
-        return _ngram_jaccard_pairs_replicated(
-            df, text_col, id_col, shingle_n, thresh, cap, id_type,
-        )
-
     postings = df.select(
         F.col(id_col).alias("__id"),
         word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
@@ -2221,15 +2167,6 @@ def _ngram_jaccard_pairs_arrow(
     return out
 
 
-#: Plan-stats ceiling for the replicated-index ngram path: above this
-#: estimated input size the operator keeps the streaming exchange
-#: shape (a replicated index must fit every executor; 256 MB of input
-#: text ⇒ roughly 50M postings ≈ 600 MB of index per worker at the
-#: extreme — the safe upper edge for a 100+ GB box, and far below
-#: what the exchange path handles).
-_NGRAM_BROADCAST_MAX_BYTES = 256 << 20
-
-
 def _ngram_jaccard_pairs_replicated(
     df: DataFrame,
     text_col: str,
@@ -2237,7 +2174,6 @@ def _ngram_jaccard_pairs_replicated(
     shingle_n: int,
     thresh: float,
     cap: int,
-    id_type,
 ) -> DataFrame:
     """Small-corpus fast path of :func:`ngram_jaccard_pairs`: one
     Arrow collect of the per-doc ``(id, set_size, shingle_hashes)``
@@ -2255,19 +2191,13 @@ def _ngram_jaccard_pairs_replicated(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    import os as _os
-    import time as _time
-    _dbg = _os.environ.get("JEPL_NGRAM_DEBUG") == "1"
-    _t0 = _time.time()
+    id_type = df.schema[id_col].dataType
     spark = df.sparkSession
     per_doc = df.select(
         F.col(id_col).alias("__id"),
         word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
     )
     tbl = per_doc.toArrow().combine_chunks()
-    if _dbg:
-        print(f"[ngram] collect {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
     idc = (tbl.column("__id").chunk(0)
            if tbl.column("__id").num_chunks
            else pa.array([], type=tbl.schema.field("__id").type))
@@ -2346,16 +2276,10 @@ def _ngram_jaccard_pairs_replicated(
             (ids_d.astype(np.int64).view(np.uint64) * K) >> np.uint64(33)
         ) % np.uint64(n_parts)
     owner_doc = owner_doc.astype(np.int32)
-    if _dbg:
-        print(f"[ngram] prep {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
     bc = spark.sparkContext.broadcast(
         (ids_d, lens_d, doc_s32, grp_end, pos_by_doc, doc_offs,
          owner_doc)
     )
-    if _dbg:
-        print(f"[ngram] broadcast {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
 
     out_schema = StructType([
         StructField("id_a", id_type),
@@ -2419,8 +2343,6 @@ def _ngram_jaccard_pairs_replicated(
     out = spark.range(0, n_parts, 1, n_parts).mapInArrow(
         _slice_pairs, out_schema
     ).localCheckpoint(eager=True)  # tiny: thresholded pairs
-    if _dbg:
-        print(f"[ngram] slices {_time.time()-_t0:.2f}s", flush=True)
     bc.unpersist()  # checkpoint is eager — no task reads it again
     return out
 

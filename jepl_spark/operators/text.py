@@ -15,6 +15,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jepl_spark.operators import replicate
+
 # whitespace tokenization shared by several operators
 def _tokens(text: Column) -> Column:
     t = F.trim(text)
@@ -657,12 +659,17 @@ def strip_boilerplate_lines(
     exchange.  Fully SQL-replayable (deterministic, order-preserving).
 
     ``out_col`` writes the cleaned text to a new column instead of
-    replacing ``text_col``.  NULL text passes through unchanged."""
+    replacing ``text_col``.  NULL text passes through unchanged.  Each
+    physical row is stripped on its own: rows sharing an id keep their
+    own texts (the id counts once toward a line's document frequency).
+    """
     if max_df < 1:
         raise ValueError(f"max_df must be >= 1, got {max_df}")
     out_col = out_col or text_col
+    # __h (the text's hash) tells same-id rows apart on the join path
     lines = df.select(
         F.col(id_col),
+        F.xxhash64(F.col(text_col)).alias("__h"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("__pos", "__line"),
     ).withColumn("__key", F.trim(F.col("__line")))
     countable = F.length("__key") >= min_line_chars
@@ -676,51 +683,73 @@ def strip_boilerplate_lines(
     # The hot set is the FILTERED aggregate — boilerplate lines only,
     # normally a handful of nav/footer strings.  When it is small
     # enough to hold (probed with a bounded collect, exact either
-    # way), stripping becomes a pure per-row projection: re-split the
-    # text and drop lines whose trimmed form is in the collected set —
-    # the line join-back, the per-doc ordered reassembly exchange, and
-    # the final doc join all disappear from the plan.  A short line
-    # can never equal a hot key (dfreq only counts keys of length ≥
-    # min_line_chars), so the projection needs no length guard, same
-    # as the join path's null-marker check.  A pathological corpus
-    # with more hot lines than the probe bound falls back to the
-    # streaming join shape below (the aggregation recomputes — only
-    # ever paid in that pathological case).
-    hot_rows = dfreq.select("__key").limit(
-        _BOILERPLATE_LOCAL_MAX_LINES + 1).collect()
-    if len(hot_rows) <= _BOILERPLATE_LOCAL_MAX_LINES:
-        if not hot_rows:
-            # nothing to strip: split+rejoin on '\n' is the identity
-            rebuilt_txt = F.col(text_col)
-        else:
-            hot = F.lit([r[0] for r in hot_rows])
-            rebuilt_txt = F.concat_ws("\n", F.filter(
-                F.split(F.col(text_col), "\n"),
-                lambda ln: ~F.array_contains(hot, F.trim(ln)),
-            ))
-        clean = F.when(
-            F.col(text_col).isNull(), F.lit(None).cast("string")
-        ).otherwise(rebuilt_txt)
-        return df.withColumn(out_col, clean)
+    # way), stripping becomes a pure per-row projection (see
+    # _strip_boilerplate_local).  The probe stops one line past the
+    # bound, so only a hot set within it is complete; a pathological
+    # corpus with more hot lines falls back to the streaming join
+    # shape below (the aggregation recomputes — only ever paid in that
+    # pathological case).
+    hot = [r[0] for r in dfreq.select("__key").limit(
+        _BOILERPLATE_LOCAL_MAX_LINES + 1).collect()]
+    if (len(hot) <= _BOILERPLATE_LOCAL_MAX_LINES
+            and replicate.fits(len(hot), _BOILERPLATE_LOCAL_MAX_LINES)):
+        return _strip_boilerplate_local(df, hot, text_col, out_col)
     # short lines can never appear in dfreq (it only counts countable
     # keys), so a plain null-check on the join marker suffices
     kept = lines.join(
         dfreq.select("__key", F.lit(True).alias("__drop")), "__key", "left"
     ).where(F.col("__drop").isNull())
-    rebuilt = kept.groupBy(id_col).agg(
+    # reassemble per physical row, keyed by (id, text hash): same-id
+    # rows with different texts keep their own lines, and identical
+    # rows (whose lines coincide) rebuild once — collect_set keeps
+    # their shared (pos, line) entries a single time
+    rebuilt = kept.groupBy(
+        F.col(id_col).alias("__rid"), F.col("__h").alias("__rh")
+    ).agg(
         F.concat_ws(
             "\n", F.transform(F.array_sort(
-                F.collect_list(F.struct("__pos", "__line"))
+                F.collect_set(F.struct("__pos", "__line"))
             ), lambda s: s["__line"])
         ).alias("__clean")
     )
-    base = df.join(rebuilt, id_col, "left")
+    base = df.withColumn("__h", F.xxhash64(F.col(text_col))).join(
+        rebuilt,
+        F.col(id_col).eqNullSafe(F.col("__rid"))
+        & (F.col("__h") == F.col("__rh")),
+        "left",
+    )
     # docs whose every line was stripped (or NULL text) need care:
     # NULL text stays NULL; a fully-stripped doc becomes ''
     clean = F.when(
         F.col(text_col).isNull(), F.lit(None).cast("string")
     ).otherwise(F.coalesce(F.col("__clean"), F.lit("")))
-    return base.withColumn(out_col, clean).drop("__clean")
+    return base.withColumn(out_col, clean).drop(
+        "__h", "__rid", "__rh", "__clean")
+
+
+def _strip_boilerplate_local(
+    df: DataFrame, hot: list, text_col: str, out_col: str
+) -> DataFrame:
+    """strip_boilerplate_lines with the hot set collected: a pure
+    per-row projection — re-split the text and drop lines whose
+    trimmed form is in ``hot`` — so the line join-back, the per-doc
+    ordered reassembly exchange and the final doc join all disappear
+    from the plan.  A short line can never equal a hot key (dfreq only
+    counts keys of length ≥ min_line_chars), so the projection needs
+    no length guard, same as the join path's null-marker check."""
+    if not hot:
+        # nothing to strip: split+rejoin on '\n' is the identity
+        rebuilt_txt = F.col(text_col)
+    else:
+        arr = F.lit(hot)
+        rebuilt_txt = F.concat_ws("\n", F.filter(
+            F.split(F.col(text_col), "\n"),
+            lambda ln: ~F.array_contains(arr, F.trim(ln)),
+        ))
+    clean = F.when(
+        F.col(text_col).isNull(), F.lit(None).cast("string")
+    ).otherwise(rebuilt_txt)
+    return df.withColumn(out_col, clean)
 
 
 def oov_rate(
@@ -1066,15 +1095,6 @@ def lm_train(
     )
 
 
-#: Plan-stats ceiling for the replicated-model score path: above this
-#: input estimate the exploded join keeps the streaming scale shape (a
-#: replicated model must fit the driver and every executor; ~64 MB of
-#: text bounds the Heaps-law bigram table to low-hundreds-of-MB of
-#: sorted int64 key/count arrays).  One-sided safe: unknown or large
-#: plan stats fall back to the join path, which streams any size.
-_LM_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-
 def _lm_score_replicated(
     df: DataFrame, lm: BigramLM, text_col: str, id_col: str
 ) -> DataFrame:
@@ -1204,20 +1224,21 @@ def lm_score(
     trained with ``hash_keys``; the unigram side is vocabulary-sized
     and broadcasts) — then one (id) exchange for the per-doc average;
     rounded to 6 decimals so the result is stable under distributed
-    summation order and replayable in SQL."""
+    summation order and replayable in SQL.
+
+    Hashed models score on a replicated model instead when
+    ``replicate.fits`` the MODEL — its bigram and unigram tables at
+    16 B per row, by the optimizer's row estimates: both tables collect
+    once, broadcast, and each task scores its documents in one Arrow
+    pass.  The bound is on what is collected, not on the corpus being
+    scored, so a large model scoring a small delta keeps the join
+    shape."""
     if lm.hashed:
         # replicated-model path (hashed models only — the string/SQL
-        # path keeps its historical plan): when the optimizer's own
-        # estimate says the corpus is small enough that its Heaps-law
-        # bigram table replicates safely, score locally per task
-        # instead of shuffling the exploded occurrence stream
-        try:
-            sz = (df._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())
-            est_bytes = int(sz if isinstance(sz, int) else sz.toString())
-        except Exception:
-            est_bytes = 1 << 62
-        if est_bytes <= _LM_BROADCAST_MAX_BYTES:
+        # path keeps its historical plan): the model collects as
+        # int64 key + count, 16 B per row
+        if replicate.fits(
+                replicate.planned_bytes(lm.table, lm.uni, row_bytes=16)):
             return _lm_score_replicated(df, lm, text_col, id_col)
         # string-free keys, mirroring the hashed train side (see
         # lm_train): no bigram strings, no per-occurrence string

@@ -3,8 +3,6 @@
 Captures per-batch QueryProgressEvent data (rows/sec, batch duration,
 state-store rows, event-time watermark) — the ops/metrics surface the
 north rule requires alongside per-partition lineage (sink.add_lineage).
-Also computes window-close latency: the gap between a window's end and
-the wall-clock time its rows were committed by the sink.
 """
 
 from __future__ import annotations

@@ -76,3 +76,17 @@ def assert_matches_oracle(
     expect_names = stmt.column_names()
     got_names = result.columns[n_dims:]
     assert got_names == expect_names, (got_names, expect_names)
+
+
+def spy(monkeypatch, module, name: str) -> list:
+    """Wrap ``module.name`` for the test's duration; each call appends
+    ``name`` to the returned list."""
+    calls: list = []
+    real = getattr(module, name)
+
+    def wrapper(*args, **kwargs):
+        calls.append(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, wrapper)
+    return calls

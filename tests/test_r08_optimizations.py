@@ -13,7 +13,10 @@ promised bit-identical results — these pin the promises directly.
 - the fused minhash doc pass must reproduce
   minhash_signature_from_hashes(word_shingle_hashes(...)) exactly;
 - lm_score's hashed-key path must score identically to the string
-  path.
+  path;
+- every replicate-or-shuffle guard (jepl_spark.operators.replicate)
+  is forced each way through its one seam, and a spy shows the two
+  arms ran different paths with equal output.
 """
 
 from __future__ import annotations
@@ -25,7 +28,30 @@ import pytest
 from pyspark.sql import functions as F
 
 from jepl_spark.operators import dedup as D
+from jepl_spark.operators import replicate as R
 from jepl_spark.operators import text as T
+
+from helpers import spy
+
+
+def _forced(monkeypatch, local: bool):
+    """Force every replicate-or-shuffle guard to one side."""
+    monkeypatch.setattr(R, "fits", lambda size, bound=None: local)
+
+
+def _both_arms(monkeypatch, module, local_fn, run):
+    """Run ``run()`` with the guards forced local, then forced to the
+    shuffle side; the spy on ``module.local_fn`` must have fired in the
+    first arm only.  Returns the two outputs."""
+    calls = spy(monkeypatch, module, local_fn)
+    _forced(monkeypatch, True)
+    local = run()
+    assert calls, f"{local_fn} did not run in the local arm"
+    calls.clear()
+    _forced(monkeypatch, False)
+    shuffled = run()
+    assert not calls, f"{local_fn} ran in the shuffle arm"
+    return local, shuffled
 
 
 def test_np_xxhash64_twin_matches_spark(spark):
@@ -90,7 +116,7 @@ def _brute_jaccard_pairs(rows, n, min_j, cap):
 
 
 @pytest.mark.parametrize("cap,min_j", [(1000, 0.1), (2, 0.1), (1000, 0.0)])
-def test_ngram_paths_agree_and_match_reference(spark, cap, min_j):
+def test_ngram_paths_agree_and_match_reference(spark, monkeypatch, cap, min_j):
     rows = [
         (1, "a b c d e f g"),
         (2, "a b c d e f g"),
@@ -103,16 +129,16 @@ def test_ngram_paths_agree_and_match_reference(spark, cap, min_j):
         (8, "A B c D e f g"),      # case folding
     ]
     tiny = spark.createDataFrame(rows, "doc_id long, text string")
-    rep = sorted(
-        tuple(r) for r in D.ngram_jaccard_pairs(
-            tiny, min_jaccard=min_j, max_shingle_df=cap).collect()
-    )
-    exc = sorted(
-        tuple(r) for r in D.ngram_jaccard_pairs(
+
+    def run(materialize=True):
+        return sorted(tuple(r) for r in D.ngram_jaccard_pairs(
             tiny, min_jaccard=min_j, max_shingle_df=cap,
-            materialize=False).collect()
-    )
+            materialize=materialize).collect())
+
+    rep, exc = _both_arms(
+        monkeypatch, D, "_ngram_jaccard_pairs_replicated", run)
     assert rep == exc
+    assert run(materialize=False) == exc  # lazy plan: never collects
     ref = _brute_jaccard_pairs(
         [(r[0], r[1]) for r in rows], 3, min_j, cap)
     assert [(a, b) for a, b, _ in ref] == [(a, b) for a, b, _ in rep]
@@ -120,13 +146,34 @@ def test_ngram_paths_agree_and_match_reference(spark, cap, min_j):
         assert jref == jgot
 
 
-def test_ngram_string_ids_take_exchange_path(spark):
-    # non-integral ids must keep the join formulation and still work
-    rows = [("x", "a b c d"), ("y", "a b c d"), ("z", "p q r s")]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = sorted(tuple(r) for r in
-                 D.ngram_jaccard_pairs(df, min_jaccard=0.5).collect())
-    assert got == [("x", "y", 1.0)]
+def test_ngram_string_ids_match_integer_ids(spark, monkeypatch):
+    """String ids run on long surrogates, on both paths: the same
+    corpus under string ids gives the integer-id pairs, mapped back as
+    (least, greatest) of the original ids — including a null id and a
+    duplicate id.  materialize=False cannot freeze surrogates and
+    raises."""
+    texts = [(3, "a b c d"), (1, "a b c d"), (2, "a b c x"),
+             (None, "a b c d"), (4, "p q r s"), (4, "a b c d"),
+             (10, "a b c x")]
+    num = spark.createDataFrame(texts, "doc_id long, text string")
+    # string order reverses integer order: pairs must re-sort
+    names = {i: f"id{100 - i}" for i in (1, 2, 3, 4, 10)}
+    strs = spark.createDataFrame(
+        [(None if i is None else names[i], t) for i, t in texts],
+        "doc_id string, text string")
+    for kwargs in ({"min_jaccard": 0.5}, {"min_jaccard": 0.0},
+                   {"max_shingle_df": 2}):
+        want = sorted(
+            (min(names[a], names[b]), max(names[a], names[b]), j)
+            for a, b, j in D.ngram_jaccard_pairs(num, **kwargs).collect())
+        assert want
+        rep, exc = _both_arms(
+            monkeypatch, D, "_ngram_jaccard_pairs_replicated",
+            lambda: sorted(tuple(r) for r in
+                           D.ngram_jaccard_pairs(strs, **kwargs).collect()))
+        assert rep == exc == want, kwargs
+    with pytest.raises(ValueError, match="materialize=False"):
+        D.ngram_jaccard_pairs(strs, materialize=False)
 
 
 def test_myers_wer_matches_reference_dp(spark):
@@ -222,20 +269,16 @@ def test_fused_minhash_doc_pass_matches_signature_pipeline(spark):
     assert f == p
 
 
-def test_components_local_path_matches_iterative(spark):
+def test_components_local_path_matches_iterative(spark, monkeypatch):
     random.seed(9)
     n = 400
     edges = [(random.randrange(n), random.randrange(n))
              for _ in range(500)] + [(7, 7)]  # self-loop dropped
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = sorted(tuple(r) for r in D.near_dup_components(df).collect())
-    old = D._COMPONENTS_LOCAL_MAX_EDGES
-    try:
-        D._COMPONENTS_LOCAL_MAX_EDGES = -1  # force the iterative rounds
-        slow = sorted(tuple(r) for r in
-                      D.near_dup_components(df).collect())
-    finally:
-        D._COMPONENTS_LOCAL_MAX_EDGES = old
+    fast, slow = _both_arms(
+        monkeypatch, D, "_components_local",
+        lambda: sorted(tuple(r) for r in
+                       D.near_dup_components(df).collect()))
     assert fast == slow
     # contract: component == smallest reachable id
     comp = dict(fast)
@@ -259,7 +302,7 @@ def test_lm_hashed_path_matches_string_path(spark):
     assert rh == rs
 
 
-def test_lm_replicated_path_matches_join_path(spark):
+def test_lm_replicated_path_matches_join_path(spark, monkeypatch):
     """The size-guarded replicated score path (collect + broadcast the
     hashed model, binary-search lookups in one Arrow pass) must equal
     the exploded shuffle-join formulation row-for-row — including
@@ -272,19 +315,14 @@ def test_lm_replicated_path_matches_join_path(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kwargs in ({}, {"min_count": 10}, {"alpha": 2.0}):
         lm = T.lm_train(df, hash_keys=True, **kwargs)
-        rep = {(r.doc_id, r.n_bigrams, r.avg_logp)
-               for r in T.lm_score(df, lm).collect()}
-        old = T._LM_BROADCAST_MAX_BYTES
-        try:
-            T._LM_BROADCAST_MAX_BYTES = -1  # force the join path
-            join = {(r.doc_id, r.n_bigrams, r.avg_logp)
-                    for r in T.lm_score(df, lm).collect()}
-        finally:
-            T._LM_BROADCAST_MAX_BYTES = old
+        rep, join = _both_arms(
+            monkeypatch, T, "_lm_score_replicated",
+            lambda: {(r.doc_id, r.n_bigrams, r.avg_logp)
+                     for r in T.lm_score(df, lm).collect()})
         assert rep == join, kwargs
 
 
-def test_dedup_against_replicated_matches_join_path(spark):
+def test_dedup_against_replicated_matches_join_path(spark, monkeypatch):
     """The replicated minhash dedup_against probe (collect + broadcast
     the snapshot signature matrix, binary-search band postings) must
     drop exactly the docs the banded-join formulation drops — across
@@ -310,39 +348,37 @@ def test_dedup_against_replicated_matches_join_path(spark):
         "doc_id long, text string")
     for kwargs in ({}, {"threshold": 0.5}, {"max_band_bucket": 2},
                    {"max_band_bucket": None}):
-        rep = sorted((r.doc_id, r.text) for r in
-                     D.dedup_against(delta, snap, policy="minhash",
-                                     **kwargs).collect())
-        old = D._AGAINST_BROADCAST_MAX_BYTES
-        try:
-            D._AGAINST_BROADCAST_MAX_BYTES = -1  # force the join path
-            join = sorted((r.doc_id, r.text) for r in
-                          D.dedup_against(delta, snap, policy="minhash",
-                                          **kwargs).collect())
-        finally:
-            D._AGAINST_BROADCAST_MAX_BYTES = old
+        rep, join = _both_arms(
+            monkeypatch, D, "_minhash_against_losers_replicated",
+            lambda: sorted((r.doc_id, r.text) for r in D.dedup_against(
+                delta, snap, policy="minhash", **kwargs).collect()))
         assert rep == join, kwargs
 
 
-def test_boilerplate_local_path_matches_join_path(spark):
+def test_boilerplate_local_path_matches_join_path(spark, monkeypatch):
     """strip_boilerplate_lines' collected-hot-set projection must
     rebuild exactly what the join-back + ordered-reassembly shape
     rebuilds — within-doc duplicate lines, whitespace-padded matches,
     blank separators, NULL/empty docs, min_line_chars screening, a
-    custom out_col, and the nothing-to-strip identity case."""
+    custom out_col, the nothing-to-strip identity case, and duplicate
+    doc_ids: each physical row keeps its own text (two same-id rows
+    with different texts, two fully identical rows, a NULL id)."""
     rows = [(1, "keep\nSPAM\nkeep2"), (2, "SPAM\nSPAM\nother"),
             (3, None), (4, ""), (5, "\n\n"), (6, "  SPAM  \nx"),
-            (7, "a\nSPAM"), (8, "z\nSPAM"), (9, "  \nq")]
+            (7, "a\nSPAM"), (8, "z\nSPAM"), (9, "  \nq"),
+            (1, "first\nSPAM"), (7, "a\nSPAM"), (None, "SPAM\nn")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kwargs in ({"max_df": 2}, {"max_df": 2, "min_line_chars": 5},
                    {"max_df": 2, "out_col": "clean"}, {"max_df": 100}):
-        loc = sorted(tuple(r) for r in
-                     T.strip_boilerplate_lines(df, **kwargs).collect())
-        old = T._BOILERPLATE_LOCAL_MAX_LINES
-        try:
-            T._BOILERPLATE_LOCAL_MAX_LINES = -1  # force the join path
-            join = sorted(tuple(r) for r in
-                          T.strip_boilerplate_lines(df, **kwargs).collect())
-        finally:
-            T._BOILERPLATE_LOCAL_MAX_LINES = old
+        loc, join = _both_arms(
+            monkeypatch, T, "_strip_boilerplate_local",
+            lambda: sorted(
+                (tuple(r) for r in
+                 T.strip_boilerplate_lines(df, **kwargs).collect()),
+                key=repr))
         assert loc == join, kwargs
+        assert len(join) == len(rows), kwargs
+        if "out_col" in kwargs:
+            assert (1, "keep\nSPAM\nkeep2", "keep\nkeep2") in join
+            assert (1, "first\nSPAM", "first") in join
+            assert join.count((7, "a\nSPAM", "a")) == 2
